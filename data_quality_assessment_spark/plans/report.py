@@ -25,15 +25,10 @@ Parity notes (each cites the reference line and the quirk):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import cadence
-
-
-def with_reference_iat(df: DataFrame, entity: str, ts: str) -> DataFrame:
-    """Q1 parity: lag over the GLOBAL (entity, ts) order."""
-    return cadence.with_iat(df, entity, ts, global_order=True)
 
 
 def dupe_score(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -63,27 +58,26 @@ def six_metric_report(
     keep/drop F1 rather than equality), so the plan has no
     single-partition WindowExec and holds at any cardinality.
 
-    r6 plan restructure (results bit-identical, pinned by
-    tests/test_report_equiv.py against the pre-r6 composition):
+    Plan shape (results bit-identical to the pre-r6 composition with its
+    full-row dedup, pinned by tests/test_report_equiv.py):
 
       * dupe + format/unknown/completeness fuse into ONE pass over the
         raw frame — all four are integer counts, so re-grouping the
         sums through the dupe metric's (entity, ts) aggregate is exact;
-      * the dedup->IAT subtree (scan + two windows + a per-row
-        md5(to_json) tiebreak) used to be re-executed ~5x — once per
-        reference through regularity_score / outlier_score. Mode, MAD
-        and the outlier count now all derive from ONE
-        ``groupBy(iat).count()`` frequency pass: mode is the same
-        min-struct pick, MAD is the exact weighted median (the
-        cumulative-count interpolation identical to ``F.median``, the
-        formula already driver-verified in ``_host_cadence_agg``), and
-        the outlier numerator/denominator are INTEGER sums of
-        frequencies (the per-row modified-z test depends only on the
-        distinct iat value). Only the regularity sums are
-        order-sensitive float additions, so they keep their original
-        per-row aggregate shape — the one remaining row pass. The
-        subtree now executes 2x instead of ~5x and the plan drops from
-        20 exchanges to 11.
+      * the IAT metrics read only (entity, ts) of the deduplicated rows,
+        i.e. the distinct keys that aggregate already groups, so the lag
+        runs over the key set (null-ts and null-entity groups are one
+        key each either way) — no row dedup, no tiebreak;
+      * mode, MAD and the outlier count derive from ONE
+        ``groupBy(iat).count()`` frequency table (MAD is the weighted
+        ``percentile(dev, 0.5, freq)``, outlier counts are INTEGER sums
+        of frequencies). Only the regularity sums are order-sensitive
+        float additions, so they keep their per-row aggregate shape.
+
+    It runs as one SQL execution: the references to the key set and to
+    the frequency table plan identical exchanges, which Spark reuses.
+    Column pruning gives the key set and the dupe+schema aggregate
+    different exchanges, so the raw frame is scanned twice.
     """
     required = required or [entity, ts, "payload_str", "payload_num"]
     known = known or required
@@ -127,14 +121,9 @@ def six_metric_report(
         ).alias("completeness"),
     )
 
-    # --- dedup then IAT (global order, Q1). Winner within a (entity, ts)
-    # group is interchangeable for the IAT metrics, but the tiebreak must
-    # be DETERMINISTIC across runs/repartitionings (D2) — md5 of the full
-    # row content, never monotonically_increasing_id.
-    tiebreak = F.md5(F.to_json(F.struct(*[F.col(c) for c in df.columns])))
-    w = Window.partitionBy(entity, "_ts").orderBy(tiebreak)
-    dd = d.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
-    iat = cadence.with_iat(dd, entity, "_ts", global_order=global_order)
+    # --- IAT over the distinct keys (dedup then IAT, Q1 in parity mode)
+    keys = per_key.select(entity, "_ts")
+    iat = cadence.with_iat(keys, entity, "_ts", global_order=global_order)
     clean = iat.filter(F.col("iat").isNotNull()).select("iat")
 
     # --- PASS B: iat frequency table -> mode, MAD, outlier counts.
@@ -143,14 +132,6 @@ def six_metric_report(
     # values; seeding the counts with the frequencies is identical),
     # with map-side partials and no global sort or window.
     freq = clean.groupBy("iat").agg(F.count(F.lit(1)).alias("_c"))
-    # freq is referenced by mode/stats/outlier AND (via mode) the
-    # regularity pass; without materialization each reference re-runs
-    # the scan + dedup window + IAT window + per-row md5 subtree that
-    # derives it. The table is frequency-collapsed (one row per
-    # distinct IAT) — lazily checkpoint it so the subtree executes
-    # once per report evaluation (recomputed on every invocation; this
-    # is intra-query materialization, not cross-run caching).
-    freq = freq.localCheckpoint(eager=False)
     mode_row = freq.agg(
         F.min(
             F.struct((-F.col("_c")).alias("nc"), F.col("iat").alias("v"))

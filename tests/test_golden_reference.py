@@ -70,7 +70,11 @@ CASES = [
                          ids=[c[0] for c in CASES])
 def test_golden_report(spark, name, data, schema, entity, golden):
     if not os.path.exists(data):
-        pytest.skip("reference data not present")
+        pytest.skip(
+            f"{data} is missing ({REF} is not checked out): golden parity "
+            f"of report.reference_report with the shipped {name} report "
+            "is UNVERIFIED"
+        )
     row = report.reference_report(spark, data, schema, entity).collect()[0]
     got = row.asDict()
     for k, want in golden.items():

@@ -147,6 +147,44 @@ def test_scale_mode_six_metric_has_no_global_window(spark, pages_path):
     assert scale.count() == 1
 
 
+def test_scale_mode_six_metric_one_execution(spark, pages_path):
+    """The scale-mode report runs as ONE SQL execution (no
+    localCheckpoint job) and computes IAT over the distinct (entity, ts)
+    keys: no per-row md5(to_json) tiebreak, no row_number dedup window,
+    at most 2 parquet scans and 9 shuffle Exchanges in the final plan."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from data_quality_assessment_spark.plans import report
+
+    df = spark.read.parquet(pages_path).select(
+        F.substring_index(F.substring_index("url", "://", -1), "/", 1)
+        .alias("entity_id"),
+        F.col("warc_ts").alias("observationDateTime"),
+    )
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+    sc.listenerBus().waitUntilEmpty()
+    # counted from BEFORE the report is built: a localCheckpoint
+    # registers its own execution when it is declared
+    before = store.executionsCount()
+    out = report.six_metric_report(
+        df, required=["entity_id", "observationDateTime"], global_order=False
+    )
+    assert len(out.collect()) == 1
+    sc.listenerBus().waitUntilEmpty()
+    assert store.executionsCount() - before == 1
+
+    final = _plan(out).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, final
+    for banned in ("md5", "to_json", "StructsToJson", "row_number",
+                   "ExistingRDD"):
+        assert banned not in final, (banned, final)
+    assert final.count("FileScan parquet") <= 2, final
+    assert len(re.findall(r"[-+] Exchange ", final)) <= 9, final
+
+
 def test_join_stat_forced_broadcast_hint(spark, pages_path):
     """broadcast=True keeps the static hint for caller-known-small dims."""
     from data_quality_assessment_spark.operators import cadence

@@ -1,7 +1,8 @@
-"""r6 plan restructure of six_metric_report: the fused one-pass
-dupe+schema aggregate and the frequency-table mode/MAD/outlier path
-must produce BIT-identical rows to the original composition (kept here
-as the reference implementation)."""
+"""six_metric_report's plan shape — the fused one-pass dupe+schema
+aggregate, IAT over the distinct (entity, ts) keys instead of a
+full-row md5 dedup, and the frequency-table mode/MAD/outlier path —
+must produce BIT-identical rows to the pre-r6 composition (kept here
+as the reference implementation, row dedup included)."""
 
 from __future__ import annotations
 
@@ -126,10 +127,40 @@ def _rows_bursty(n=120):
     return rows
 
 
+def _rows_conflicting(n=160):
+    # re-sent (entity, ts) keys whose payloads DIFFER (the reference's
+    # row dedup picks one winner by content hash; the report keeps only
+    # the key), an unparseable ts on two rows of one entity (one
+    # null-ts key) and null-entity rows (one entity group, own IATs)
+    base = dt.datetime(2022, 3, 1, 8, 0, 0)
+    rows = []
+    for i in range(n):
+        e = i % 4
+        jitter = 9 if i % 13 == 0 else 0
+        outage = 400 if e == 3 and i >= n // 2 else 0
+        t = base + dt.timedelta(
+            seconds=(i // 4) * (20 + 3 * e) + jitter + outage
+        )
+        rows.append((e, t.strftime("%Y-%m-%dT%H:%M:%S+05:30"),
+                     f"v{i}", float(i), None))
+    rows += [
+        (e, ts, None if k % 2 else f"w{k}", float(-k), "x" if k == 3 else None)
+        for k, (e, ts, *_) in enumerate(rows[::11])
+    ]
+    rows += [
+        (1, "not-a-timestamp", "bad", 1.0, None),
+        (1, "2022-03-01T25:61:00", None, 2.0, None),
+        (None, "2022-03-01T08:00:05+05:30", "n0", 3.0, None),
+        (None, "2022-03-01T08:00:45+05:30", "n1", 4.0, None),
+        (None, "2022-03-01T08:00:45+05:30", "n2", None, "y"),
+        (None, "2022-03-01T08:01:25+05:30", "n3", 5.0, None),
+    ]
+    return rows
+
+
 @pytest.mark.parametrize("go", [True, False])
-@pytest.mark.parametrize("mk", [_rows_regular, _rows_bursty])
+@pytest.mark.parametrize("mk", [_rows_regular, _rows_bursty, _rows_conflicting])
 def test_six_metric_report_matches_reference(spark, mk, go):
-    df = _mk_iot(spark, mk())
     kw = dict(
         required=["entity_id", "observationDateTime", "payload_str",
                   "payload_num"],
@@ -137,8 +168,19 @@ def test_six_metric_report_matches_reference(spark, mk, go):
                "payload_num"],
         global_order=go,
     )
-    got = six_metric_report(df, **kw).collect()[0].asDict()
-    want = _reference_six_metric_report(df, **kw).collect()[0].asDict()
+    # an unparseable ts is a cast error under ANSI (both paths raise);
+    # with ANSI off to_timestamp yields NULL, a format error (Q6). The
+    # mode is read when the frames are analysed, so set it before.
+    lenient = mk is _rows_conflicting
+    if lenient:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        df = _mk_iot(spark, mk())
+        got = six_metric_report(df, **kw).collect()[0].asDict()
+        want = _reference_six_metric_report(df, **kw).collect()[0].asDict()
+    finally:
+        if lenient:
+            spark.conf.unset("spark.sql.ansi.enabled")
     assert got == want
 
 
